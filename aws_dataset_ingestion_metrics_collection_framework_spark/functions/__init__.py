@@ -9,7 +9,7 @@ from .keys import (
     widget_title_col,
 )
 from .stats import statistic_agg, SUPPORTED_STATISTICS
-from .comparisons import breach_predicate, comparison_expr_sql
+from .comparisons import breach_predicate
 from .timeutil import (
     floor_to_10min,
     iso8601,
@@ -25,7 +25,6 @@ __all__ = [
     "statistic_agg",
     "SUPPORTED_STATISTICS",
     "breach_predicate",
-    "comparison_expr_sql",
     "floor_to_10min",
     "iso8601",
     "partition_cols",

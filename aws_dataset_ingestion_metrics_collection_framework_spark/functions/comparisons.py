@@ -8,33 +8,40 @@ via getattr (ref:cdk_constructs/cw_alarm.py:42-49); CloudWatch then evaluates
 CloudWatch semantics: the alarm condition is breached when the *datapoint*
 compares true against the threshold — e.g. GREATER_THAN_THRESHOLD breaches
 when value > threshold.
+
+``COMPARISONS`` is the one table of operators: the batch breach CASE, the
+batch ``statereason`` phrase and the streaming alarm machine all read it.
 """
 
 from __future__ import annotations
 
+import operator
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_OPS = {
-    "GREATER_THAN_THRESHOLD": ">",
-    "GREATER_THAN_OR_EQUAL_TO_THRESHOLD": ">=",
-    "LESS_THAN_THRESHOLD": "<",
-    "LESS_THAN_OR_EQUAL_TO_THRESHOLD": "<=",
+# operator name → (comparison, statereason phrase). The ``operator``
+# functions apply to Python floats and to Spark Columns alike.
+COMPARISONS: dict[str, tuple[Callable[[Any, Any], Any], str]] = {
+    "GREATER_THAN_THRESHOLD": (operator.gt, "greater than"),
+    "GREATER_THAN_OR_EQUAL_TO_THRESHOLD": (operator.ge, "greater than or equal to"),
+    "LESS_THAN_THRESHOLD": (operator.lt, "less than"),
+    "LESS_THAN_OR_EQUAL_TO_THRESHOLD": (operator.le, "less than or equal to"),
 }
 
 
-def breach_predicate(value: Column, operator: Column, threshold: Column) -> Column:
+def operator_case(operator_name: Column, branch: Callable[[Callable, str], Column]) -> Column:
+    """One CASE over the operator column: ``branch(cmp, phrase)`` builds each
+    operator's value; an unknown operator name yields NULL."""
+    case = F  # F.when opens the CASE, Column.when extends it
+    for name, (cmp, phrase) in COMPARISONS.items():
+        case = case.when(operator_name == name, branch(cmp, phrase))
+    return case
+
+
+def breach_predicate(value: Column, operator_name: Column, threshold: Column) -> Column:
     """Row-wise breach test where the operator itself is a column (each SLA
     row carries its own operator — one CASE, no per-SLA jobs)."""
-    return (
-        F.when(operator == "GREATER_THAN_THRESHOLD", value > threshold)
-        .when(operator == "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", value >= threshold)
-        .when(operator == "LESS_THAN_THRESHOLD", value < threshold)
-        .when(operator == "LESS_THAN_OR_EQUAL_TO_THRESHOLD", value <= threshold)
-        .otherwise(F.lit(None).cast("boolean"))
-    )
-
-
-def comparison_expr_sql(operator: str, value_sql: str = "value", threshold_sql: str = "threshold") -> str:
-    """SQL-text form for a statically-known operator (used in generated SQL)."""
-    return f"{value_sql} {_OPS[operator]} {threshold_sql}"
+    return operator_case(operator_name, lambda cmp, _: cmp(value, threshold))

@@ -15,8 +15,12 @@ Scale design:
 - The defs table is inherently small → ``broadcast()`` hint; no shuffle of
   the aggregated side for the join.
 - Filters (time range) are pushed to the parquet scan by Catalyst.
-- Percentile handling: exact ``percentile`` only when a def demands pNN;
-  sketch-based ``percentile_approx`` available via ``approx=True``.
+- Percentile handling: percentiles are computed only when a def demands
+  pNN — exact ``percentile`` over a bounded table, the mergeable
+  ``percentile_approx`` sketch over a stream (an exact percentile would
+  buffer every value of an open window in the state store).
+- Streaming: ``streaming.pipeline.streaming_scrape`` runs this same scrape
+  over a watermarked stream; nothing here is batch-only.
 
 Divergence from reference (documented): the reference's enrichment loop
 leaks ``metadata_map``/``dimensions_map`` across iterations
@@ -64,12 +68,16 @@ def compute_metric_windows(
     """W1 tumbling windows + A1 one-pass statistics per series.
 
     Input : raw_events(namespace, name, dimensions, ts, value)  [FIXTURES §1]
-    Output: (namespace, name, dimensions, window_start, window_end, stats)
+            — a bounded table or a watermarked stream
+    Output: (namespace, name, dimensions, window_start, window_end, stats);
+            over a stream, append mode emits each window once the
+            watermark passes window_end
     """
     w = F.window("ts", f"{period_seconds} seconds")
+    stats = all_statistics_struct(F.col("value"), percentiles, approx=raw_events.isStreaming)
     return (
         raw_events.groupBy(w.alias("w"), "namespace", "name", "dimensions")
-        .agg(all_statistics_struct(F.col("value"), percentiles).alias("stats"))
+        .agg(stats.alias("stats"))
         .select(
             "namespace",
             "name",
@@ -91,7 +99,6 @@ def scrape_metrics(
     collection_time: Column | None = None,
     start: str | None = None,
     end: str | None = None,
-    approx_percentiles: bool = False,
     value_cast: str = "float",
 ) -> DataFrame:
     """Full scrape job for one frequency → rows in the ``metrics_{frequency}``
@@ -100,6 +107,8 @@ def scrape_metrics(
     Mirrors one trigger firing of the streamer Lambda (SURVEY §3.2) but
     computes statistics natively. ``start``/``end`` bound the scan (pushed
     down to parquet); omitted means "all history" (backfill).
+    ``raw_events`` may also be a watermarked stream (``streaming_scrape``);
+    ``metric_defs`` is always bounded — it is read when the plan is built.
     """
     defs_f = metric_defs.filter(F.col("frequency") == frequency)  # F1
     # one driver-side pass over the (small) defs for both A2 period grouping

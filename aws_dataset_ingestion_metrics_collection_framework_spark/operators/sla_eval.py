@@ -39,7 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..functions.comparisons import breach_predicate
+from ..functions.comparisons import breach_predicate, operator_case
 
 # How many grid windows beyond n we keep for IGNORE/MISSING lookback.
 LOOKBACK_FACTOR = 4
@@ -166,15 +166,7 @@ def evaluate_slas(series: DataFrame, sla_defs: DataFrame, **gap_kwargs) -> DataF
     n_eval = (
         F.when(policy.isin("IGNORE", "MISSING"), n_obs).otherwise(F.size(last_n_grid))
     )
-    phrase = (
-        F.when(F.col("comparison_operator") == "GREATER_THAN_THRESHOLD", F.lit("greater than"))
-        .when(
-            F.col("comparison_operator") == "GREATER_THAN_OR_EQUAL_TO_THRESHOLD",
-            F.lit("greater than or equal to"),
-        )
-        .when(F.col("comparison_operator") == "LESS_THAN_THRESHOLD", F.lit("less than"))
-        .otherwise(F.lit("less than or equal to"))
-    )
+    phrase = operator_case(F.col("comparison_operator"), lambda _, text: F.lit(text))
     reason = F.when(
         insufficient,
         F.format_string("Insufficient Data: %d datapoints were unknown", n),

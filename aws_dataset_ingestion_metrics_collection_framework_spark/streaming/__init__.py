@@ -1,7 +1,8 @@
 """Structured Streaming variants of the engine's pipelines (SURVEY §7 step 7):
 
 - ``ingest``      — JSON→partitioned-Parquet converting sink (S5 replacement)
-- ``stats``       — watermarked windowed statistic engine (A1/W1 streaming)
+- ``pipeline``    — the batch statistic engine and scrape under a watermark
+  (A1/W1/W5 streaming), and the scrape → SLA alarm composition
 - ``alarm_state`` — stateful alarm state machine via applyInPandasWithState (W4)
 - ``dedup``       — exact streaming dedup (dropDuplicatesWithinWatermark)
 - ``cdc``         — changelog stream → maintained latest-version snapshot
@@ -16,8 +17,7 @@ from .ann_ingest import ingest_batch_into_index, start_ann_index_ingest
 from .alarm_state import evaluate_slots, streaming_alarm_states
 from .cdc import read_live, read_snapshot, start_snapshot_maintenance
 from .ingest import open_stream_channel, read_json_lines_stream, start_ingest
-from .pipeline import streaming_scrape, streaming_sla_pipeline
-from .stats import streaming_metric_windows
+from .pipeline import streaming_metric_windows, streaming_scrape, streaming_sla_pipeline
 
 __all__ = [
     "ingest_batch_into_index",

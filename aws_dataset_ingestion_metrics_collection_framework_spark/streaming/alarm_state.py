@@ -9,9 +9,14 @@ in the state store, and each batch emits states only for newly-completed
 grid slots.
 
 Semantics contract: replaying any datapoint stream through this operator
-yields EXACTLY the per-slot states of the batch evaluator (same
-treat_missing_data policies, same LOOKBACK_FACTOR bounded history) — pinned
-by tests/test_streaming.py which diffs the two across micro-batch splits.
+yields EXACTLY the per-slot states of the batch evaluator. Both sides read
+the same comparison table (functions/comparisons.COMPARISONS) and the same
+LOOKBACK_FACTOR; the treat_missing_data policies are written once as Column
+expressions (batch) and once as the Python loop in ``evaluate_slots``:
+tests/test_streaming.py diffs the two across micro-batch splits, and
+tests/test_alarm_state_props.py checks this side against the oracle that
+batch is property-tested against. An unknown operator name raises KeyError
+here, where batch gives a NULL breach.
 
 Scale: state per SLA is a bounded ring buffer (lookback = n × LOOKBACK_FACTOR
 slots, each 16 bytes) — thousands of SLAs fit in one executor's state store;
@@ -30,6 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import StructType
 
+from ..functions.comparisons import COMPARISONS
 from ..operators.sla_eval import LOOKBACK_FACTOR
 
 # Input rows: SLA-joined datapoints (the caller joins defs upstream, as in
@@ -47,13 +53,6 @@ OUTPUT_SCHEMA = (
 # + last emitted state (JSON string keeps the state schema primitive).
 STATE_SCHEMA = "hist string, last_ws long, last_state string"
 
-_OPS = {
-    "GREATER_THAN_THRESHOLD": lambda v, t: v > t,
-    "GREATER_THAN_OR_EQUAL_TO_THRESHOLD": lambda v, t: v >= t,
-    "LESS_THAN_THRESHOLD": lambda v, t: v < t,
-    "LESS_THAN_OR_EQUAL_TO_THRESHOLD": lambda v, t: v <= t,
-}
-
 
 def evaluate_slots(
     observed: dict[int, float],
@@ -64,7 +63,7 @@ def evaluate_slots(
     m: int,
     n: int,
     policy: str,
-    period: int,
+    period: int | None = None,
 ) -> list[str]:
     """Grid-slot state evaluation — the single-series semantics shared by
     batch and streaming (mirrors operators/sla_eval.evaluate_slas; the
@@ -73,9 +72,10 @@ def evaluate_slots(
 
     ``observed``: slot_ts → value.  ``slots``: ascending slot timestamps to
     evaluate (must cover the lookback window before the first emitted slot
-    for exact batch parity — callers pass full history).
+    for exact batch parity — callers pass full history). ``period`` is
+    ignored: ``slots`` already carries the grid spacing.
     """
-    cmp = _OPS[comparison_operator]
+    cmp = COMPARISONS[comparison_operator][0]
     lookback = max(n * LOOKBACK_FACTOR, 1)
     states = []
     hist: list[float | None] = []
@@ -145,7 +145,6 @@ def _alarm_state_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Ite
         m=int(params["datapoints_to_alarm"]),
         n=n,
         policy=str(params["treat_missing_data"]),
-        period=period,
     )
 
     out = []

@@ -3,8 +3,8 @@
 Batch mode runs the same logic over bounded tables; these compositions wire
 the streaming pieces into the reference's two big pipelines:
 
-  §3.2  raw events ─watermarked windows─► stats ─J1 static-join defs─►
-        metrics_{freq} rows ─► partitioned lake (streaming ingest sink)
+  §3.2  raw events ─watermark─► the batch scrape (windowed stats ─J1
+        static-join defs─► metrics_{freq} rows) ─► partitioned lake
   §3.3  stats ─broadcast sla_defs join─► datapoints ─stateful machine─►
         alarm states / transitions
 
@@ -17,11 +17,26 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from ..functions.stats import percentiles_in_defs, pick_statistic
-from ..functions.timeutil import iso8601, partition_cols
-from ..operators.metrics import series_unique_id
+from ..operators.metrics import compute_metric_windows, scrape_metrics
 from .alarm_state import streaming_alarm_states
-from .stats import streaming_metric_windows
+
+
+def streaming_metric_windows(
+    raw_stream: DataFrame,
+    period_seconds: int,
+    *,
+    watermark_delay: str = "10 minutes",
+    percentiles: list[float] | None = None,
+) -> DataFrame:
+    """Streaming W1/A1: the batch ``compute_metric_windows`` under a
+    watermark (W5 — the reference has no event-time handling, SURVEY §2.9;
+    the 10-minute default mirrors its scrape alignment,
+    ref:lambda/metric_stream_producer.py:40-43). State is one partial
+    aggregate per open (series, window), evicted once the watermark passes
+    window_end + delay."""
+    return compute_metric_windows(
+        raw_stream.withWatermark("ts", watermark_delay), period_seconds, percentiles
+    )
 
 
 def streaming_scrape(
@@ -35,60 +50,21 @@ def streaming_scrape(
     watermark_delay: str = "10 minutes",
     collection_time: Column | None = None,
 ) -> DataFrame:
-    """Streaming §3.2: windowed stats + J1 defs enrichment → append-mode
-    stream of ``metrics_{frequency}`` §1.3 rows (one period per stream; run
-    one query per distinct period, the A2 grouping).
-
-    Output schema matches batch ``operators.metrics.scrape_metrics`` so the
-    same lake writer and downstream consumers apply.
+    """Streaming §3.2: the batch ``operators.metrics.scrape_metrics`` over a
+    watermarked stream → append-mode stream of ``metrics_{frequency}`` §1.3
+    rows (one period per stream; run one query per distinct period, the A2
+    grouping). Values are doubles, so the same lake writer and downstream
+    consumers apply. Raises ``ValueError`` when no def has this frequency
+    and period.
     """
-    defs_filtered = metric_defs.filter(
-        (F.col("frequency") == frequency) & (F.col("period") == period_seconds)
-    )
-    # Defs are bounded and tiny (broadcast below); resolve the declared pNN
-    # statistics driver-side at query-build time so the windowed aggregation
-    # carries the matching percentile_approx sketches (without this, pNN defs
-    # would silently select NULL from the stats struct).
-    pcts = percentiles_in_defs(
-        [r["statistic"] for r in defs_filtered.select("statistic").distinct().collect()]
-    )
-    agg = streaming_metric_windows(
-        raw_stream, period_seconds, watermark_delay=watermark_delay, percentiles=pcts or None
-    ).withColumn(
-        "id",
-        series_unique_id(F.col("namespace"), F.col("name"), F.lit(frequency), F.col("dimensions")),
-    )
-    defs_f = defs_filtered.select(
-        F.col("namespace").alias("d_namespace"),
-        F.col("name").alias("d_name"),
-        "period",
-        "statistic",
-        F.col("metadata").alias("d_metadata"),
-        F.col("dimensions").alias("d_dimensions"),
-        series_unique_id(
-            F.col("namespace"), F.col("name"), F.lit(frequency), F.col("dimensions")
-        ).alias("d_id"),
-    )
-    joined = agg.join(F.broadcast(defs_f), agg["id"] == defs_f["d_id"], "inner")
-    ct = collection_time if collection_time is not None else F.current_timestamp()
-    return joined.select(
-        iso8601(ct).alias("collectiontime"),
-        F.col("d_namespace").alias("namespace"),
-        F.col("d_name").alias("name"),
-        F.col("period").cast("int").alias("period"),
-        F.lit(frequency).alias("frequency"),
-        F.col("statistic"),
-        F.col("d_metadata").alias("metadata"),
-        F.col("d_dimensions").alias("dimensions"),
-        F.lit(account_id).alias("accountid"),
-        iso8601(F.col("window_start")).alias("metrictimestamp"),
-        pick_statistic(F.col("stats"), F.col("statistic"), pcts or None)
-        .cast("double")
-        .alias("metricvalue"),
-        F.col("id"),
-        F.col("d_name").alias("label"),
-        F.lit(region).alias("region"),
-        *partition_cols(F.col("window_start")),
+    return scrape_metrics(
+        raw_stream.withWatermark("ts", watermark_delay),
+        metric_defs.filter(F.col("period") == period_seconds),
+        frequency,
+        account_id=account_id,
+        region=region,
+        collection_time=collection_time,
+        value_cast="double",
     )
 
 

@@ -302,10 +302,17 @@ def _cpu_ticks() -> tuple[int, int] | None:
     interference' in OPTIMIZATION_r15.md)."""
     try:
         with open("/proc/stat") as f:
-            vals = [int(x) for x in f.readline().split()[1:]]
-        return (vals[7] if len(vals) > 7 else 0), sum(vals)
+            return _parse_cpu_line(f.readline())
     except (OSError, ValueError):
         return None
+
+
+def _parse_cpu_line(line: str) -> tuple[int, int]:
+    """(steal_ticks, total_ticks) of one /proc/stat cpu line.  The total
+    sums user..steal only: guest and guest_nice (fields 9-10) are already
+    counted inside user and nice."""
+    vals = [int(x) for x in line.split()[1:9]]
+    return (vals[7] if len(vals) > 7 else 0), sum(vals)
 
 
 def _steal_pct(t0, t1) -> float | None:
@@ -419,14 +426,14 @@ def main() -> None:
             out, err = proc.communicate()
             current[0] = None
             steal = _steal_pct(ticks0, _cpu_ticks())
-            if steal is not None:
-                steal_during[name] = steal
             if proc.returncode != 0:
                 print(f"# worker {name} FAILED:\n{err[-2000:]}", file=sys.stderr)
                 _emit(partial=True)
                 raise SystemExit(1)
             rec = json.loads(out.strip().splitlines()[-1])
             timings[name] = rec["sec"]
+            if steal is not None:
+                steal_during[name] = steal
             if verbose:
                 print(f"# {name}: {rec['sec']}s ({rec['rows']} rows)", file=sys.stderr)
     else:

@@ -79,7 +79,8 @@ def main(out_dir: str, sf_dir: str = "/root/testdata/sf0.001") -> dict:
     weights = WGT.importance_weights(
         curated, "doc_id", "text", F.col("lang") == "en", buckets=128
     )
-    curated = curated.join(weights.select("doc_id", "weight"), "doc_id")
+    # pinned: the affinity count and the decontamination pass both read it
+    curated = curated.join(weights.select("doc_id", "weight"), "doc_id").localCheckpoint()
     summary["above_avg_target_affinity"] = (
         curated.crossJoin(
             F.broadcast(weights.agg(F.avg("weight").alias("_avg")))
@@ -91,7 +92,12 @@ def main(out_dir: str, sf_dir: str = "/root/testdata/sf0.001") -> dict:
     bench = docs.filter(F.col("doc_id") % 100 == 0)
     curated = curated.filter(F.col("doc_id") % 100 != 0)  # bench never trains
     flags = D.decontaminate(curated, bench, id_col="doc_id", text_col="text", n=4)
-    curated = curated.join(flags.filter(~F.col("contaminated")), "doc_id", "left_semi")
+    # pinned: every stage below (split, packs, token counts, the three
+    # writes) reads the final corpus — without this each one re-runs the
+    # whole curation chain above
+    curated = curated.join(
+        flags.filter(~F.col("contaminated")), "doc_id", "left_semi"
+    ).localCheckpoint()
     summary["after_decontamination"] = curated.count()
     split = TX.train_val_split(curated, "doc_id", val_fraction=0.02)
     summary["val_docs"] = split.filter(F.col("split") == "val").count()

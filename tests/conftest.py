@@ -1,3 +1,4 @@
+import functools
 import os
 import sys
 
@@ -28,3 +29,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def declared_query(spark, sf_dir):
+    """``declared_query(name)`` → the ``__spark_entry__.queries()`` entry built
+    against ``sf_dir``, once per session. Building every entry takes minutes
+    (the ANN entries build and self-check their indexes when declared), and
+    two sweeps over the whole declared surface need only the built
+    DataFrames (schema, plan), so they share one build. A build that raises
+    is not memoized: each caller sees the exception."""
+    import __spark_entry__ as entry_mod
+
+    queries = entry_mod.queries()
+
+    @functools.cache
+    def build(name):
+        return queries[name](spark, sf_dir)
+
+    return build

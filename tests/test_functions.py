@@ -20,6 +20,7 @@ from aws_dataset_ingestion_metrics_collection_framework_spark.functions import (
     unique_id_col,
     widget_title_col,
 )
+from aws_dataset_ingestion_metrics_collection_framework_spark.functions.comparisons import COMPARISONS
 from aws_dataset_ingestion_metrics_collection_framework_spark.functions.timeutil import (
     floor_to_10min,
     iso8601,
@@ -121,12 +122,18 @@ def test_breach_predicate(spark):
         (4.0, "LESS_THAN_THRESHOLD", 4.0, False),
         (4.0, "LESS_THAN_OR_EQUAL_TO_THRESHOLD", 4.0, True),
         (None, "GREATER_THAN_THRESHOLD", 4.0, None),
+        (5.0, "GreaterThanThreshold", 4.0, None),  # unknown name: NULL breach
     ]
     df = spark.createDataFrame(
         [(v, op, t) for v, op, t, _ in rows], "value double, op string, threshold double"
     )
     got = df.select(breach_predicate(F.col("value"), F.col("op"), F.col("threshold")).alias("b")).collect()
     assert [r["b"] for r in got] == [e for _, _, _, e in rows]
+    # the streaming alarm machine applies the same table to Python floats
+    for v, op, t, e in rows:
+        if v is not None and op in COMPARISONS:
+            assert COMPARISONS[op][0](v, t) is e, (v, op, t)
+    assert "GreaterThanThreshold" not in COMPARISONS  # streaming: KeyError
 
 
 def test_floor_to_10min_and_iso(spark):

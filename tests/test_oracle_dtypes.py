@@ -34,14 +34,13 @@ def duck(sf_dir):
     con.close()
 
 
-def test_every_oracle_dtype_matches_spark(spark, sf_dir, duck):
+def test_every_oracle_dtype_matches_spark(declared_query, sf_dir, duck):
     os.environ["SPARK_GRAFT_ORACLE_SF_DIR"] = sf_dir  # literal-table oracles
-    queries = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     bad, errors = {}, {}
     for name, sql in sorted(oracles.items()):
         try:
-            sdf = queries[name](spark, sf_dir)
+            sdf = declared_query(name)
             mism = dtype_mismatches(sdf.schema, duck_oracle_schema(duck, sql))
         except Exception as e:
             errors[name] = str(e)[:200]

@@ -93,6 +93,14 @@ def test_steal_pct_math_and_none_paths():
     assert bench._steal_pct((0, 1000), (0, 1000)) is None  # zero elapsed
 
 
+def test_cpu_line_total_excludes_guest_fields():
+    # guest/guest_nice (the last two fields) are already inside user/nice:
+    # the total is user..steal, so steal% is not understated on guest hosts.
+    line = "cpu  100 20 30 800 10 5 5 30 70 7\n"
+    assert bench._parse_cpu_line(line) == (30, 1000)
+    assert bench._parse_cpu_line("cpu  100 20 30 800\n") == (0, 950)
+
+
 def test_cpu_ticks_shape_on_linux():
     # On Linux /proc/stat exists: the sample must be (steal, total) ints
     # with steal <= total; elsewhere the helper degrades to None.

@@ -91,6 +91,22 @@ def test_simple_threshold_alarm(spark):
     assert run(spark, [(0, 1.0), (1, 6.0), (2, 2.0)]) == ["OK", "ALARM", "OK"]
 
 
+def test_statereason_names_each_operator(spark):
+    phrases = {
+        "GREATER_THAN_THRESHOLD": "were greater than the threshold",
+        "GREATER_THAN_OR_EQUAL_TO_THRESHOLD": "were greater than or equal to the threshold",
+        "LESS_THAN_THRESHOLD": "were less than the threshold",
+        "LESS_THAN_OR_EQUAL_TO_THRESHOLD": "were less than or equal to the threshold",
+    }
+    slas = spark.createDataFrame(
+        [(op, "s1", 5.0, op, 1, 1, "NOT_BREACHING", PERIOD) for op in phrases], SLA_SCHEMA
+    )
+    out = evaluate_slas(series_df(spark, [(0, 5.0)]), slas).collect()
+    assert {r["sla_id"]: r["statereason"] for r in out}.keys() == phrases.keys()
+    for r in out:
+        assert phrases[r["sla_id"]] in r["statereason"], r["sla_id"]
+
+
 def test_m_of_n(spark):
     # m=2 of n=3, breach slots 1,3
     got = run(spark, [(0, 9.0), (1, 1.0), (2, 9.0), (3, 9.0)], m=2, n=3)

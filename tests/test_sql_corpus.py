@@ -99,7 +99,7 @@ def test_no_cartesian_product_in_sql_corpus_plans(spark, sf_dir):
     assert offenders == []
 
 
-def test_no_cartesian_product_in_any_declared_query_plan(spark, sf_dir):
+def test_no_cartesian_product_in_any_declared_query_plan(declared_query):
     """Planning guard over the FULL declared-query surface (not just the
     SQL corpus): building every queries() entry at sf0.001 and checking the
     executed plan for CartesianProduct nodes. Catches a lost join condition
@@ -108,9 +108,9 @@ def test_no_cartesian_product_in_any_declared_query_plan(spark, sf_dir):
     import __spark_entry__ as entry_mod
 
     offenders, errors = [], []
-    for name, fn in entry_mod.queries().items():
+    for name in entry_mod.queries():
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+            plan = declared_query(name)._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # a query that cannot even plan is a failure
             errors.append(f"{name}: {e}")
             continue

@@ -2,7 +2,8 @@
 implementation; every streaming path is diffed against it.
 
 - ingest: JSON lines (incl. corrupt) → partitioned parquet lake + error route
-- stats: watermarked windowed aggregation ≡ batch compute_metric_windows
+- stats: watermarked windowed aggregation ≡ batch compute_metric_windows;
+  streaming scrape ≡ batch scrape on every column of each closed window
 - alarm state: incremental applyInPandasWithState across micro-batch splits
   ≡ batch evaluate_slas on the union of the data
 """
@@ -321,7 +322,7 @@ def test_streaming_scrape_end_to_end(spark, tmp_path):
     )
     _await(q)
     got = {
-        (r["metrictimestamp"], r["metricvalue"]): r
+        r["metrictimestamp"]: r.asDict()
         for r in spark.read.parquet(str(tmp_path / "metrics")).collect()
     }
     # batch reference: same scrape over the bounded table, minus windows the
@@ -329,21 +330,46 @@ def test_streaming_scrape_end_to_end(spark, tmp_path):
     from aws_dataset_ingestion_metrics_collection_framework_spark.operators.metrics import scrape_metrics
     batch = spark.read.schema(schema).json(str(src))
     max_ts = batch.agg(F.max("ts")).collect()[0][0]
+    batch_out = scrape_metrics(
+        batch, defs, "minute",
+        collection_time=F.lit("2026-01-01 00:00:00").cast("timestamp"),
+        value_cast="double",
+    )
+    # same columns, in the same order, with the same types as batch
+    assert [(f.name, f.dataType) for f in out.schema] == [
+        (f.name, f.dataType) for f in batch_out.schema
+    ]
     want = {
-        (r["metrictimestamp"], r["metricvalue"]): r
-        for r in scrape_metrics(
-            batch, defs, "minute",
-            collection_time=F.lit("2026-01-01 00:00:00").cast("timestamp"),
-            value_cast="double",
-        ).collect()
+        r["metrictimestamp"]: r.asDict()
+        for r in batch_out.collect()
         if dt.datetime.fromisoformat(r["metrictimestamp"]).replace(tzinfo=None)
            + dt.timedelta(seconds=60) <= max_ts
     }
-    assert set(want) <= set(got)
     assert len(got) >= len(want) > 20
+    # every closed window equals the batch row on every column
+    assert {k: got.get(k) for k in want} == want
     sample = next(iter(got.values()))
     assert sample["frequency"] == "minute" and sample["statistic"] == "Sum"
-    assert {"region", "year", "month", "day", "hour"} <= set(sample.asDict())
+
+
+def test_streaming_scrape_without_defs_raises(spark, tmp_path):
+    """No def for the frequency/period: the query fails when it is built
+    (the batch scrape's error), instead of running and emitting nothing."""
+    from aws_dataset_ingestion_metrics_collection_framework_spark.catalog import METRIC_DEFS_SCHEMA
+    from aws_dataset_ingestion_metrics_collection_framework_spark.streaming import streaming_scrape
+
+    src = tmp_path / "ev"; src.mkdir()
+    schema = _write_events(src, n=10)
+    defs = spark.createDataFrame(
+        [("App/Events", "click", "minute", 60, "Sum", None, "{}",
+          "events", None, None, "1", None, None, None)],
+        METRIC_DEFS_SCHEMA,
+    )
+    stream = spark.readStream.schema(schema).json(str(src))
+    with pytest.raises(ValueError, match="no metric defs"):
+        streaming_scrape(stream, defs, "minute", period_seconds=3600)
+    with pytest.raises(ValueError, match="no metric defs"):
+        streaming_scrape(stream, defs, "hour", period_seconds=60)
 
 
 def test_streaming_scrape_pnn_defs(spark, tmp_path):

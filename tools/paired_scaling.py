@@ -27,15 +27,25 @@ HEAVY = [
 ]
 
 
-def _worker(face: str, cpus: int, sf_dir: str) -> float:
+def _worker(face: str, cpus: int, sf_dir: str) -> float | None:
+    """Seconds of one bench worker run, or None (stderr tail printed) when
+    the worker fails or times out."""
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_SF_DIR=sf_dir)
-    out = subprocess.run(
-        [sys.executable, os.path.join(os.path.dirname(__file__), "..", "bench.py"),
-         "--worker", face],
-        env=env, capture_output=True, text=True, timeout=600,
-    )
-    line = out.stdout.strip().splitlines()[-1]
-    return float(json.loads(line)["sec"])
+    try:
+        out = subprocess.run(
+            [sys.executable, os.path.join(os.path.dirname(__file__), "..", "bench.py"),
+             "--worker", face],
+            env=env, capture_output=True, text=True, timeout=600,
+        )
+    except subprocess.TimeoutExpired as e:
+        err = e.stderr.decode(errors="replace") if isinstance(e.stderr, bytes) else e.stderr or ""
+        print(f"# {face} at {cpus}c timed out after {e.timeout}s:\n{err[-2000:]}", file=sys.stderr)
+        return None
+    if out.returncode != 0:
+        print(f"# {face} at {cpus}c failed (rc {out.returncode}):\n{out.stderr[-2000:]}",
+              file=sys.stderr)
+        return None
+    return float(json.loads(out.stdout.strip().splitlines()[-1])["sec"])
 
 
 def _quiet(gate: float = 1.5, budget: float = 90.0) -> float:
@@ -54,7 +64,10 @@ def main() -> None:
     for face in faces:
         load = _quiet()
         s32 = _worker(face, 32, sf_dir)
-        s8 = _worker(face, 8, sf_dir)
+        s8 = _worker(face, 8, sf_dir) if s32 is not None else None
+        if s32 is None or s8 is None:
+            print(f"{face}: skipped (worker failed)", flush=True)
+            continue
         results[face] = {
             "load_before_pair": load,
             "sec_32c": s32,

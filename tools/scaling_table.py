@@ -20,9 +20,15 @@ def _load(path: str) -> dict:
         return json.loads(f.read().strip().splitlines()[-1])
 
 
+# Floor for timings before ratios and logs: a sub-millisecond query rounds
+# to 0.0 s in the bench JSON.
+MIN_SEC = 0.001
+
+
 def main() -> None:
     c32, c8 = _load(sys.argv[1]), _load(sys.argv[2])
-    q32, q8 = c32["queries"], c8["queries"]
+    q32 = {k: max(v, MIN_SEC) for k, v in c32["queries"].items()}
+    q8 = {k: max(v, MIN_SEC) for k, v in c8["queries"].items()}
     common = sorted(set(q32) & set(q8), key=lambda k: -q32[k])
     print(f"| query | 32c sec | 8c sec | 8c/32c |")
     print(f"|---|---|---|---|")
@@ -33,7 +39,8 @@ def main() -> None:
         print(f"| {k} | {q32[k]:.2f} | {q8[k]:.2f} | {r:.2f} |")
     gm = lambda xs: math.exp(sum(math.log(x) for x in xs) / len(xs)) if xs else float("nan")
     print()
-    print(f"total 32c={c32['value']:.1f}s 8c={c8['value']:.1f}s ratio={c8['value']/c32['value']:.2f}")
+    print(f"total 32c={c32['value']:.1f}s 8c={c8['value']:.1f}s "
+          f"ratio={max(c8['value'], MIN_SEC) / max(c32['value'], MIN_SEC):.2f}")
     print(f"geomean ratio: heavy(>3s@32c, n={len(heavy)})={gm(heavy):.2f}  "
           f"light(n={len(light)})={gm(light):.2f}  all={gm(heavy+light):.2f}")
 
