@@ -9,16 +9,9 @@ treat_missing_data policies, OK/ALARM/INSUFFICIENT_DATA state machine.
 
 from __future__ import annotations
 
+from ..functions.comparisons import COMPARISONS
+from ..operators.sla_eval import MISSING_DATA_POLICIES
 from .metric import Metric
-
-COMPARISON_OPERATORS = (
-    "GREATER_THAN_THRESHOLD",
-    "GREATER_THAN_OR_EQUAL_TO_THRESHOLD",
-    "LESS_THAN_THRESHOLD",
-    "LESS_THAN_OR_EQUAL_TO_THRESHOLD",
-)
-
-TREAT_MISSING_DATA = ("NOT_BREACHING", "BREACHING", "IGNORE", "MISSING")
 
 
 class SLA:
@@ -40,9 +33,9 @@ class SLA:
         evaluation_periods: int = 1,
         sns_enabled: bool = False,
     ) -> None:
-        if comparison_operator not in COMPARISON_OPERATORS:
+        if comparison_operator not in COMPARISONS:
             raise ValueError(f"unknown comparison_operator: {comparison_operator!r}")
-        if treat_missing_data not in TREAT_MISSING_DATA:
+        if treat_missing_data not in MISSING_DATA_POLICIES:
             raise ValueError(f"unknown treat_missing_data: {treat_missing_data!r}")
         self.sla_set = sla_set
         self.metric = metric

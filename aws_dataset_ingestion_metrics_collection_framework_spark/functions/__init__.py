@@ -9,7 +9,6 @@ from .keys import (
     widget_title_col,
 )
 from .stats import statistic_agg, SUPPORTED_STATISTICS
-from .comparisons import breach_predicate
 from .timeutil import (
     floor_to_10min,
     iso8601,
@@ -24,7 +23,6 @@ __all__ = [
     "parse_alarm_name",
     "statistic_agg",
     "SUPPORTED_STATISTICS",
-    "breach_predicate",
     "floor_to_10min",
     "iso8601",
     "partition_cols",

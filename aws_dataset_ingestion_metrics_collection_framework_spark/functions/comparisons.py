@@ -1,5 +1,5 @@
-"""Comparison-operator-string → breach predicate (SURVEY §2.7 C13, §4
-rewrite #2).
+"""Comparison-operator string → breach comparison and statereason phrase
+(SURVEY §2.7 C13, §4 rewrite #2).
 
 The reference resolves these strings onto CloudWatch ComparisonOperator enums
 via getattr (ref:cdk_constructs/cw_alarm.py:42-49); CloudWatch then evaluates
@@ -9,8 +9,9 @@ CloudWatch semantics: the alarm condition is breached when the *datapoint*
 compares true against the threshold — e.g. GREATER_THAN_THRESHOLD breaches
 when value > threshold.
 
-``COMPARISONS`` is the one table of operators: the batch breach CASE, the
-batch ``statereason`` phrase and the streaming alarm machine all read it.
+``COMPARISONS`` is the one table of operators: the alarm kernel
+(operators/sla_eval.alarm_states, batch and streaming) and the batch
+``statereason`` phrase both read it.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # operator name → (comparison, statereason phrase). The ``operator``
-# functions apply to Python floats and to Spark Columns alike.
+# functions apply to numpy arrays and Python floats alike.
 COMPARISONS: dict[str, tuple[Callable[[Any, Any], Any], str]] = {
     "GREATER_THAN_THRESHOLD": (operator.gt, "greater than"),
     "GREATER_THAN_OR_EQUAL_TO_THRESHOLD": (operator.ge, "greater than or equal to"),
@@ -32,16 +33,10 @@ COMPARISONS: dict[str, tuple[Callable[[Any, Any], Any], str]] = {
 }
 
 
-def operator_case(operator_name: Column, branch: Callable[[Callable, str], Column]) -> Column:
-    """One CASE over the operator column: ``branch(cmp, phrase)`` builds each
-    operator's value; an unknown operator name yields NULL."""
+def operator_phrase(operator_name: Column) -> Column:
+    """Each operator's ``statereason`` phrase, as one CASE over the operator
+    column; an unknown operator name yields NULL."""
     case = F  # F.when opens the CASE, Column.when extends it
-    for name, (cmp, phrase) in COMPARISONS.items():
-        case = case.when(operator_name == name, branch(cmp, phrase))
+    for name, (_, phrase) in COMPARISONS.items():
+        case = case.when(operator_name == name, F.lit(phrase))
     return case
-
-
-def breach_predicate(value: Column, operator_name: Column, threshold: Column) -> Column:
-    """Row-wise breach test where the operator itself is a column (each SLA
-    row carries its own operator — one CASE, no per-SLA jobs)."""
-    return operator_case(operator_name, lambda cmp, _: cmp(value, threshold))

@@ -7,42 +7,116 @@ evaluates natively (SURVEY §2.5 W3/W4, §3.3):
 
 1. **Gap-fill** (W3/W5): generate the expected window grid per series with
    ``sequence() + explode`` and left-join actual datapoints, so missing
-   windows become explicit NULL rows.
-2. **Breach predicate** (C13): per-row CASE on the SLA's comparison operator.
-3. **m-of-n sliding count** (A6/W3): over the last ``evaluation_periods``
-   windows, alarm iff ≥ ``datapoints_to_alarm`` breach. Evaluated with a
-   bounded ``collect_list`` window + higher-order functions so each SLA row
-   can carry its own (m, n, policy) — one shuffle for ALL SLAs, no per-SLA
-   jobs.
-4. **treat_missing_data policies** (W5):
+   windows become explicit rows with a NULL value.
+2. **The alarm rule** (C13/A6/W3/W5): ``alarm_states`` is the one numpy
+   kernel for the breach test, the m-of-n count and the missing-data
+   policies. Batch runs it over each shuffle partition of the grid
+   (``mapInArrow``); the streaming state machine
+   (streaming/alarm_state.py) runs it over each SLA's retained slot array.
+   Over the last ``evaluation_periods`` slots, a row alarms iff at least
+   ``datapoints_to_alarm`` breach:
    - ``NOT_BREACHING`` — missing windows count as non-breaching;
    - ``BREACHING``     — missing windows count as breaching;
    - ``IGNORE``        — evaluation uses the last n *observed* datapoints
-     (missing windows are skipped), which preserves the previous state
-     through gaps;
-   - ``MISSING``       — like IGNORE, but if no datapoints are observed in
-     the lookback the state is INSUFFICIENT_DATA.
+     within the SLA's last ``n × LOOKBACK_FACTOR`` slots (missing windows
+     are skipped), which preserves the previous state through gaps; with
+     none observed the state is INSUFFICIENT_DATA;
+   - ``MISSING``       — the same as IGNORE in this model.
+   A NaN datapoint is a missing one, in batch and in streaming alike:
+   CloudWatch's PutMetricData rejects NaN, so it never reaches an alarm.
+   An operator or policy name outside the known ones raises ``ValueError``
+   naming the SLA; no row reads OK on a rule the engine cannot evaluate.
    (CloudWatch's full algorithm has additional premature-data subtleties;
    this is the documented engine model, property-tested against a plain-
    Python oracle in tests/test_sla_eval.py.)
-5. **State machine** (W4): OK / ALARM / INSUFFICIENT_DATA per window;
+3. **State machine** (W4): OK / ALARM / INSUFFICIENT_DATA per window;
    transition detection via ``lag``; alert payload building (J3 —
    ref:lambda/sla_parse.py:60-73) for rows entering ALARM.
 
 Scale: grid size = (#SLAs × windows-in-range) — independent of raw datapoint
 volume; the only big-table shuffle happened upstream in the statistic engine.
-State windows partition by sla_id (thousands of partitions, trivially
-parallel; no skew since every series has the same grid length).
+The grid shuffles once on sla_id; each partition is sorted by (sla_id, ws)
+and evaluated with a handful of cumsums, so no SLA needs its own job.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import StructType
 
-from ..functions.comparisons import breach_predicate, operator_case
+from ..functions.comparisons import COMPARISONS, operator_phrase
 
-# How many grid windows beyond n we keep for IGNORE/MISSING lookback.
+# How many slots beyond n an SLA keeps for IGNORE/MISSING lookback.
 LOOKBACK_FACTOR = 4
+MISSING_DATA_POLICIES = ("NOT_BREACHING", "BREACHING", "IGNORE", "MISSING")
+
+
+def _reject(sla_id: np.ndarray, names: np.ndarray, known: np.ndarray, what: str) -> None:
+    if not known.all():
+        i = int(np.argmin(known))
+        raise ValueError(f"SLA {sla_id[i]!r}: unknown {what} {names[i]!r}")
+
+
+def alarm_states(sla_id, value, threshold, comparison_operator, m, n, policy):
+    """The m-of-n alarm rule over per-row arrays.
+
+    Rows are grouped by ``sla_id`` and ordered by slot, one row per grid
+    slot; ``value`` NaN marks a missing slot. The other arguments are per-row
+    arrays or scalars. Returns ``(breach, statevalue, breaches, n_eval)``:
+    the row's breach (False where missing), its state, and the two counts
+    that ``statereason`` quotes.
+    """
+    value = np.asarray(value, dtype=float)
+    rows = np.arange(len(value))
+    sla_id, threshold, op, m, n, policy = (
+        np.broadcast_to(a, value.shape) for a in (sla_id, threshold, comparison_operator, m, n, policy)
+    )
+    breach = np.zeros(value.shape, bool)
+    known = np.zeros(value.shape, bool)
+    for name, (cmp, _) in COMPARISONS.items():
+        hit = op == name
+        known |= hit
+        breach |= hit & cmp(value, threshold)
+    _reject(sla_id, op, known, "comparison_operator")
+    rule = {p: policy == p for p in MISSING_DATA_POLICIES}
+    _reject(sla_id, policy, np.logical_or.reduce(list(rule.values())), "treat_missing_data")
+
+    new_sla = np.ones(value.shape, bool)
+    new_sla[1:] = sla_id[1:] != sla_id[:-1]
+    start = np.maximum.accumulate(np.where(new_sla, rows, 0))
+
+    def last(x, w):
+        """Sum of ``x`` over each row's last ``w`` slots of its own SLA, and
+        how many slots that is."""
+        total = np.concatenate(([0], np.cumsum(x)))
+        lo = np.maximum(rows + 1 - w, start)
+        return total[rows + 1] - total[lo], rows + 1 - lo
+
+    missing = np.isnan(value)
+    observed = ~missing
+    grid_breaches, grid_n = last(breach, n)
+    breaching, _ = last(breach | missing, n)
+    n_obs = np.minimum(last(observed, np.maximum(n * LOOKBACK_FACTOR, 1))[0], n)
+    # breaches among the last n_obs observed rows: a cumsum in observed order
+    rank = np.cumsum(observed)
+    observed_breaches = np.concatenate(([0], np.cumsum(breach[observed])))
+    obs_breaches = observed_breaches[rank] - observed_breaches[rank - n_obs]
+
+    skips_missing = rule["IGNORE"] | rule["MISSING"]
+    breaches = np.where(
+        rule["NOT_BREACHING"], grid_breaches, np.where(rule["BREACHING"], breaching, obs_breaches)
+    )
+    n_eval = np.where(skips_missing, n_obs, grid_n)
+    statevalue = np.where(
+        skips_missing & (n_obs == 0),
+        "INSUFFICIENT_DATA",
+        np.where(breaches >= m, "ALARM", "OK"),
+    )
+    return breach, statevalue, breaches, n_eval
 
 
 def gap_fill(
@@ -85,107 +159,67 @@ def gap_fill(
     return grid.join(series, ["series_id", "ws"], "left")
 
 
+def _evaluate_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    # One table for the whole partition: an SLA can straddle two Arrow batches.
+    batches = list(batches)
+    if not batches:
+        return
+    table = pa.Table.from_batches(batches)
+    col = lambda name: table.column(name).to_numpy()  # noqa: E731
+    value = col("value").astype(float)
+    breach, statevalue, breaches, n_eval = alarm_states(
+        col("sla_id"),
+        value,
+        col("threshold"),
+        col("comparison_operator"),
+        col("datapoints_to_alarm"),
+        col("evaluation_periods"),
+        col("treat_missing_data"),
+    )
+    table = (
+        table.append_column("breach", pa.array(breach, mask=np.isnan(value)))
+        .append_column("statevalue", pa.array(statevalue))
+        .append_column("breaches", pa.array(breaches, pa.int64()))
+        .append_column("n_eval", pa.array(n_eval, pa.int64()))
+    )
+    yield from table.to_batches()
+
+
 def evaluate_slas(series: DataFrame, sla_defs: DataFrame, **gap_kwargs) -> DataFrame:
     """Full evaluation → one row per (sla_id, ws) with ``statevalue`` ∈
     {OK, ALARM, INSUFFICIENT_DATA} and supporting columns."""
     grid = gap_fill(series, sla_defs, **gap_kwargs)
-    grid = grid.withColumn(
-        "breach",
-        breach_predicate(F.col("value"), F.col("comparison_operator"), F.col("threshold")),
+    schema = (
+        StructType([*grid.schema])
+        .add("breach", "boolean")
+        .add("statevalue", "string")
+        .add("breaches", "long")
+        .add("n_eval", "long")
     )
-
-    max_n_row = sla_defs.agg(F.max("evaluation_periods")).collect()[0][0]
-    lookback = max(int(max_n_row or 1) * LOOKBACK_FACTOR, 1)
-
-    w = (
-        Window.partitionBy("sla_id")
-        .orderBy("ws")
-        .rowsBetween(-(lookback - 1), Window.currentRow)
-    )
-    # hist: bounded history of (value, breach) including missing (value null)
-    hist = F.collect_list(F.struct(F.col("ws"), F.col("value"), F.col("breach"))).over(w)
-    # collect_list drops nothing here: struct itself is never null
-    df = grid.withColumn("hist", hist)
-
-    n = F.col("evaluation_periods")
-    m = F.col("datapoints_to_alarm")
-    last_n_grid = F.slice(
-        F.col("hist"),
-        F.greatest(F.lit(1), F.size("hist") - n + 1),
-        F.least(n, F.size("hist")),
-    )
-    # The window frame above is sized by the GLOBAL max(evaluation_periods);
-    # each SLA's IGNORE/MISSING lookback is its own n × LOOKBACK_FACTOR. The
-    # grid is dense per sla_id, so slicing the per-SLA tail of hist by slot
-    # count matches the oracle's hist[-lookback:] exactly.
-    per_sla_lb = F.greatest(n * F.lit(LOOKBACK_FACTOR), F.lit(1))
-    hist_sla = F.slice(
-        F.col("hist"),
-        F.greatest(F.lit(1), F.size("hist") - per_sla_lb + 1),
-        F.least(per_sla_lb, F.size("hist")),
-    )
-    observed = F.filter(hist_sla, lambda x: x["value"].isNotNull())
-    last_n_obs = F.slice(
-        observed,
-        F.greatest(F.lit(1), F.size(observed) - n + 1),
-        F.least(n, F.size(observed)),
-    )
-
-    breaches_grid = F.size(F.filter(last_n_grid, lambda x: x["breach"] == True))  # noqa: E712
-    breaches_grid_or_missing = F.size(
-        F.filter(last_n_grid, lambda x: (x["breach"] == True) | x["value"].isNull())  # noqa: E712
-    )
-    breaches_obs = F.size(F.filter(last_n_obs, lambda x: x["breach"] == True))  # noqa: E712
-    n_obs = F.size(last_n_obs)
-
-    policy = F.col("treat_missing_data")
-    in_alarm = (
-        F.when(policy == "NOT_BREACHING", breaches_grid >= m)
-        .when(policy == "BREACHING", breaches_grid_or_missing >= m)
-        .otherwise((n_obs > 0) & (breaches_obs >= m))  # IGNORE / MISSING
-    )
-    insufficient = (
-        F.when(policy == "MISSING", n_obs == 0)
-        .when(policy == "IGNORE", n_obs == 0)
-        .otherwise(F.lit(False))
-    )
-    state = (
-        F.when(insufficient, F.lit("INSUFFICIENT_DATA"))
-        .when(in_alarm, F.lit("ALARM"))
-        .otherwise(F.lit("OK"))
+    evaluated = (
+        grid.repartition("sla_id")
+        .sortWithinPartitions("sla_id", "ws")
+        .mapInArrow(_evaluate_partition, schema)
     )
     # statereason — CloudWatch composes a human-readable reason stored in the
     # slas table (ref:cdk_constructs/glue_catalog_construct.py:186-191,
     # scraped verbatim at ref:lambda/sla_stream_producer.py:61-88). The
-    # evaluator synthesizes the same shape from the decision internals.
-    breaches = (
-        F.when(policy == "NOT_BREACHING", breaches_grid)
-        .when(policy == "BREACHING", breaches_grid_or_missing)
-        .otherwise(breaches_obs)
-    )
-    n_eval = (
-        F.when(policy.isin("IGNORE", "MISSING"), n_obs).otherwise(F.size(last_n_grid))
-    )
-    phrase = operator_case(F.col("comparison_operator"), lambda _, text: F.lit(text))
+    # evaluator synthesizes the same shape from the kernel's counts.
     reason = F.when(
-        insufficient,
-        F.format_string("Insufficient Data: %d datapoints were unknown", n),
+        F.col("statevalue") == "INSUFFICIENT_DATA",
+        F.format_string("Insufficient Data: %d datapoints were unknown", F.col("evaluation_periods")),
     ).otherwise(
         F.format_string(
             "Threshold Crossed: %d out of the last %d datapoints were %s the "
             "threshold (%s) (%d datapoints for ALARM)",
-            breaches,
-            n_eval,
-            phrase,
+            F.col("breaches"),
+            F.col("n_eval"),
+            operator_phrase(F.col("comparison_operator")),
             F.col("threshold"),
-            m,
+            F.col("datapoints_to_alarm"),
         )
     )
-    return (
-        df.withColumn("statevalue", state)
-        .withColumn("statereason", reason)
-        .drop("hist")
-    )
+    return evaluated.withColumn("statereason", reason).drop("breaches", "n_eval")
 
 
 def state_transitions(evaluated: DataFrame) -> DataFrame:

@@ -3,40 +3,48 @@
 The reference's one genuinely stateful operator is the CloudWatch Alarm
 state machine (OK / ALARM / INSUFFICIENT_DATA with transition publication,
 ref:cdk_constructs/cw_alarm.py:32-62; SURVEY §2.5 W4, §2.9). Batch mode
-evaluates it with window functions (operators/sla_eval.py); this module is
-the incremental version: state per ``sla_id`` persists across micro-batches
-in the state store, and each batch emits states only for newly-completed
-grid slots.
+evaluates it over the gap-filled grid (operators/sla_eval.py); this module
+is the incremental version: state per ``sla_id`` persists across
+micro-batches in the state store, and each batch emits states only for
+newly-completed grid slots.
 
-Semantics contract: replaying any datapoint stream through this operator
-yields EXACTLY the per-slot states of the batch evaluator. Both sides read
-the same comparison table (functions/comparisons.COMPARISONS) and the same
-LOOKBACK_FACTOR; the treat_missing_data policies are written once as Column
-expressions (batch) and once as the Python loop in ``evaluate_slots``:
+Semantics contract: replaying any in-order datapoint stream through this
+operator yields EXACTLY the per-slot states of the batch evaluator, because
+both call the same kernel, ``operators/sla_eval.alarm_states``: here over
+one SLA's dense slot array, there over the whole grid. A NaN or NULL value
+is a missing slot in both, and an unknown operator or policy raises the
+kernel's ``ValueError`` in both (here it stops the query).
 tests/test_streaming.py diffs the two across micro-batch splits, and
 tests/test_alarm_state_props.py checks this side against the oracle that
-batch is property-tested against. An unknown operator name raises KeyError
-here, where batch gives a NULL breach.
+batch is property-tested against. Late rows for already-published slots
+update the history but are never re-emitted (the reference likewise never
+retracts a published alarm state).
 
-Scale: state per SLA is a bounded ring buffer (lookback = n × LOOKBACK_FACTOR
-slots, each 16 bytes) — thousands of SLAs fit in one executor's state store;
-the stream shuffles once on sla_id and every series has identical grid
-length, so no skew.
+State: ``(first_ws, values, last_ws, last_state)`` — ``values[k]`` is slot
+``first_ws + k × period`` (NaN where missing), ``last_ws`` the newest
+published slot. A row inside the retention horizon (the retained
+``n × LOOKBACK_FACTOR + n`` slots) extends the array backward if it is
+older than ``first_ws``; an older row can reach no unpublished slot's
+lookback and is dropped.
+
+Scale: state per SLA is a bounded array of ``n × (LOOKBACK_FACTOR + 1)``
+doubles, so thousands of SLAs fit in one executor's state store; each
+micro-batch costs one kernel call per SLA that received rows. The stream
+shuffles once on sla_id and every series has identical grid length, so no
+skew.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql.types import StructType
 
-from ..functions.comparisons import COMPARISONS
-from ..operators.sla_eval import LOOKBACK_FACTOR
+from ..operators.sla_eval import LOOKBACK_FACTOR, alarm_states
 
 # Input rows: SLA-joined datapoints (the caller joins defs upstream, as in
 # batch gap_fill). ws is epoch seconds of the window start.
@@ -49,9 +57,8 @@ OUTPUT_SCHEMA = (
     "sla_id string, ws long, value double, statevalue string, "
     "prev_state string, transition boolean"
 )
-# State: JSON history of observed [slot_ts, value] pairs + last emitted slot
-# + last emitted state (JSON string keeps the state schema primitive).
-STATE_SCHEMA = "hist string, last_ws long, last_state string"
+OUTPUT_COLUMNS = ["sla_id", "ws", "value", "statevalue", "prev_state", "transition"]
+STATE_SCHEMA = "first_ws long, values array<double>, last_ws long, last_state string"
 
 
 def evaluate_slots(
@@ -65,110 +72,63 @@ def evaluate_slots(
     policy: str,
     period: int | None = None,
 ) -> list[str]:
-    """Grid-slot state evaluation — the single-series semantics shared by
-    batch and streaming (mirrors operators/sla_eval.evaluate_slas; the
-    property-test oracle in tests/test_sla_eval.py is the independent
-    check of the same model).
-
-    ``observed``: slot_ts → value.  ``slots``: ascending slot timestamps to
-    evaluate (must cover the lookback window before the first emitted slot
-    for exact batch parity — callers pass full history). ``period`` is
-    ignored: ``slots`` already carries the grid spacing.
-    """
-    cmp = COMPARISONS[comparison_operator][0]
-    lookback = max(n * LOOKBACK_FACTOR, 1)
-    states = []
-    hist: list[float | None] = []
-    for slot in slots:
-        hist.append(observed.get(slot))
-        window = hist[-lookback:]
-        if policy == "NOT_BREACHING":
-            lastn = window[-n:]
-            breaches = sum(1 for v in lastn if v is not None and cmp(v, threshold))
-            states.append("ALARM" if breaches >= m else "OK")
-        elif policy == "BREACHING":
-            lastn = window[-n:]
-            breaches = sum(1 for v in lastn if v is None or cmp(v, threshold))
-            states.append("ALARM" if breaches >= m else "OK")
-        else:  # IGNORE / MISSING
-            obs = [v for v in window if v is not None][-n:]
-            if not obs:
-                states.append("INSUFFICIENT_DATA")
-            else:
-                breaches = sum(1 for v in obs if cmp(v, threshold))
-                states.append("ALARM" if breaches >= m else "OK")
-    return states
+    """``alarm_states`` over one series: ``observed`` maps slot_ts → value,
+    ``slots`` are the ascending slot timestamps to evaluate. ``period`` is
+    ignored: ``slots`` already carries the grid spacing."""
+    value = [observed.get(slot, np.nan) for slot in slots]
+    return alarm_states(None, value, threshold, comparison_operator, m, n, policy)[1].tolist()
 
 
 def _alarm_state_fn(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
     (sla_id,) = key
     rows = pd.concat(list(pdfs), ignore_index=True)
     if rows.empty:
-        yield pd.DataFrame(
-            columns=["sla_id", "ws", "value", "statevalue", "prev_state", "transition"]
-        )
+        yield pd.DataFrame(columns=OUTPUT_COLUMNS)
         return
-
-    if state.exists:
-        hist_json, last_ws, last_state = state.get
-        observed: dict[int, float] = {int(k): v for k, v in json.loads(hist_json).items()}
-    else:
-        observed, last_ws, last_state = {}, None, None
-
     params = rows.iloc[0]
-    period = int(params["period"])
-    n = int(params["evaluation_periods"])
-    lookback = max(n * LOOKBACK_FACTOR, 1)
+    period, n = int(params["period"]), int(params["evaluation_periods"])
+    retained = max(n * LOOKBACK_FACTOR, 1) + n
+    ws, value = rows["ws"].to_numpy(np.int64), rows["value"].to_numpy(float)
+    if state.exists:
+        first_ws, kept, last_ws, last_state = state.get
+        live = ws >= last_ws - (retained - 1) * period
+        ws, value = ws[live], value[live]
+    else:
+        first_ws, kept, last_ws, last_state = int(ws.min()), [], None, None
+    # The slot array spans the retained slots and every live row; a
+    # late-only batch must not shrink it, nor re-open published slots.
+    lo = int(np.min(ws, initial=first_ws))
+    hi = int(np.max(ws, initial=first_ws + (len(kept) - 1) * period))
+    values = np.full((hi - lo) // period + 1, np.nan)
+    values[(first_ws - lo) // period :][: len(kept)] = kept
+    observed = ~np.isnan(value)
+    values[(ws[observed] - lo) // period] = value[observed]
 
-    for _, r in rows.iterrows():
-        if not pd.isna(r["value"]):
-            observed[int(r["ws"])] = float(r["value"])
-
-    # Grid: every period-aligned slot from the earliest retained observation
-    # through the newest arrival; emit only slots newer than last_ws (late
-    # rows for already-emitted slots update history but are not re-emitted —
-    # the reference likewise never retracts a published alarm state).
-    # Bounds must include last_ws (a late-only batch must not shrink the
-    # watermark and re-open already-published slots) and the batch's own row
-    # timestamps (null-value rows mark grid slots without entering observed).
-    batch_min, batch_max = int(rows["ws"].min()), int(rows["ws"].max())
-    max_ws = max(batch_max, *observed.keys()) if observed else batch_max
-    if last_ws is not None:
-        max_ws = max(max_ws, int(last_ws))
-    min_ws = min(batch_min, *observed.keys()) if observed else batch_min
-    slots = list(range(min_ws, max_ws + 1, period))
-    states = evaluate_slots(
-        observed,
-        slots,
-        threshold=float(params["threshold"]),
-        comparison_operator=str(params["comparison_operator"]),
-        m=int(params["datapoints_to_alarm"]),
-        n=n,
-        policy=str(params["treat_missing_data"]),
+    _, statevalue, _, _ = alarm_states(
+        sla_id,
+        values,
+        params["threshold"],
+        params["comparison_operator"],
+        params["datapoints_to_alarm"],
+        n,
+        params["treat_missing_data"],
     )
-
-    out = []
-    prev = last_state
-    for slot, st in zip(slots, states):
-        if last_ws is not None and slot <= last_ws:
-            continue
-        out.append(
-            {
-                "sla_id": sla_id,
-                "ws": slot,
-                "value": observed.get(slot),
-                "statevalue": st,
-                "prev_state": prev,
-                "transition": prev is None or prev != st,
-            }
-        )
-        prev = st
-
-    # Retain only the lookback tail of observations (bounded state).
-    keep_from = max_ws - (lookback + n) * period
-    observed = {k: v for k, v in observed.items() if k >= keep_from}
-    state.update((json.dumps(observed), int(max_ws), prev))
-    yield pd.DataFrame(out, columns=["sla_id", "ws", "value", "statevalue", "prev_state", "transition"])
+    emit = 0 if last_ws is None else (last_ws - lo) // period + 1
+    chain = np.concatenate((np.array([last_state], object), statevalue[emit:]))
+    out = pd.DataFrame(
+        {
+            "sla_id": sla_id,
+            "ws": lo + period * np.arange(emit, len(values)),
+            "value": values[emit:],
+            "statevalue": chain[1:],
+            "prev_state": chain[:-1],
+            "transition": chain[1:] != chain[:-1],
+        },
+        columns=OUTPUT_COLUMNS,
+    )
+    values = values[-retained:]
+    state.update((hi - (len(values) - 1) * period, values.tolist(), hi, chain[-1]))
+    yield out
 
 
 def streaming_alarm_states(datapoints: DataFrame) -> DataFrame:

@@ -8,7 +8,8 @@ test_sla_eval (same model the batch evaluator is property-tested against).
 from __future__ import annotations
 
 import pandas as pd
-from hypothesis import given, settings, strategies as st
+import pytest
+from hypothesis import example, given, settings, strategies as st
 
 from aws_dataset_ingestion_metrics_collection_framework_spark.streaming.alarm_state import (
     _alarm_state_fn,
@@ -80,6 +81,9 @@ def run_stream(batches, params):
     mn=st.tuples(st.integers(1, 3), st.integers(1, 4)),
     policy=st.sampled_from(["NOT_BREACHING", "BREACHING", "IGNORE", "MISSING"]),
 )
+@example(  # slot 19 is missing; a history pruned to observed slots forgot it
+    data={0: 1.0, 20: 1.0, 21: 1.0}, split=20, threshold=5.0, op="GREATER_THAN_THRESHOLD", mn=(1, 3), policy="BREACHING"
+)
 def test_incremental_states_match_oracle(data, split, threshold, op, mn, policy):
     m, n = min(mn), max(mn)
     params = {"threshold": threshold, "op": op, "m": m, "n": n, "policy": policy}
@@ -101,3 +105,18 @@ def test_incremental_states_match_oracle(data, split, threshold, op, mn, policy)
     )
     want = {k + lo: v for k, v in want.items()}
     assert got == want
+
+
+BREACHING_1_OF_3 = {"threshold": 5.0, "op": "GREATER_THAN_THRESHOLD", "m": 1, "n": 3, "policy": "BREACHING"}
+
+
+def test_late_row_extends_the_slot_array_backward():
+    """Slot 8 arrives after slot 10 was published: slot 9 becomes a known
+    missing slot inside slot 11's last three, as batch sees the union."""
+    got = run_stream([[(10, 1.0)], [(8, 1.0), (11, 1.0)]], BREACHING_1_OF_3)
+    assert got == {10: "OK", 11: "ALARM"}
+
+
+def test_unknown_operator_raises():
+    with pytest.raises(ValueError, match="SLA 's': unknown comparison_operator 'GreaterThanThreshold'"):
+        run_stream([[(0, 1.0)]], {**BREACHING_1_OF_3, "op": "GreaterThanThreshold"})

@@ -1,5 +1,5 @@
 """Column-builder parity tests: Spark derivations must equal the Python DSL
-derivations (C1-C4) and statistic/comparison resolution must be exact."""
+derivations (C1-C4) and statistic resolution must be exact."""
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -14,13 +14,11 @@ from aws_dataset_ingestion_metrics_collection_framework_spark.dsl import (
 from aws_dataset_ingestion_metrics_collection_framework_spark.functions import (
     alarm_name_col,
     alarm_unique_id_col,
-    breach_predicate,
     parse_alarm_name,
     statistic_agg,
     unique_id_col,
     widget_title_col,
 )
-from aws_dataset_ingestion_metrics_collection_framework_spark.functions.comparisons import COMPARISONS
 from aws_dataset_ingestion_metrics_collection_framework_spark.functions.timeutil import (
     floor_to_10min,
     iso8601,
@@ -111,29 +109,6 @@ def test_statistic_agg(spark):
 def test_statistic_agg_unknown():
     with pytest.raises(ValueError):
         statistic_agg("Bogus", F.lit(1))
-
-
-def test_breach_predicate(spark):
-    rows = [
-        (5.0, "GREATER_THAN_THRESHOLD", 4.0, True),
-        (4.0, "GREATER_THAN_THRESHOLD", 4.0, False),
-        (4.0, "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", 4.0, True),
-        (3.0, "LESS_THAN_THRESHOLD", 4.0, True),
-        (4.0, "LESS_THAN_THRESHOLD", 4.0, False),
-        (4.0, "LESS_THAN_OR_EQUAL_TO_THRESHOLD", 4.0, True),
-        (None, "GREATER_THAN_THRESHOLD", 4.0, None),
-        (5.0, "GreaterThanThreshold", 4.0, None),  # unknown name: NULL breach
-    ]
-    df = spark.createDataFrame(
-        [(v, op, t) for v, op, t, _ in rows], "value double, op string, threshold double"
-    )
-    got = df.select(breach_predicate(F.col("value"), F.col("op"), F.col("threshold")).alias("b")).collect()
-    assert [r["b"] for r in got] == [e for _, _, _, e in rows]
-    # the streaming alarm machine applies the same table to Python floats
-    for v, op, t, e in rows:
-        if v is not None and op in COMPARISONS:
-            assert COMPARISONS[op][0](v, t) is e, (v, op, t)
-    assert "GreaterThanThreshold" not in COMPARISONS  # streaming: KeyError
 
 
 def test_floor_to_10min_and_iso(spark):

@@ -2,13 +2,18 @@
 machine — property-tested against a plain-Python oracle (SURVEY §5 plan #4)."""
 
 import datetime as dt
+import math
 
+import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from aws_dataset_ingestion_metrics_collection_framework_spark.operators.sla_eval import (
     LOOKBACK_FACTOR,
+    alarm_states,
     build_alerts,
     evaluate_slas,
     gap_fill,
@@ -105,6 +110,75 @@ def test_statereason_names_each_operator(spark):
     assert {r["sla_id"]: r["statereason"] for r in out}.keys() == phrases.keys()
     for r in out:
         assert phrases[r["sla_id"]] in r["statereason"], r["sla_id"]
+
+
+def test_alarm_states_breach_per_operator():
+    """Each operator's breach at and around the threshold; a missing value
+    never breaches, and an unknown operator name raises, naming the SLA."""
+    rows = [
+        (5.0, "GREATER_THAN_THRESHOLD", 4.0, True),
+        (4.0, "GREATER_THAN_THRESHOLD", 4.0, False),
+        (4.0, "GREATER_THAN_OR_EQUAL_TO_THRESHOLD", 4.0, True),
+        (3.0, "LESS_THAN_THRESHOLD", 4.0, True),
+        (4.0, "LESS_THAN_THRESHOLD", 4.0, False),
+        (4.0, "LESS_THAN_OR_EQUAL_TO_THRESHOLD", 4.0, True),
+        (math.nan, "GREATER_THAN_THRESHOLD", 4.0, False),
+    ]
+    breach, *_ = alarm_states(
+        np.array([f"s{i}" for i in range(len(rows))], object),
+        [v for v, *_ in rows],
+        [t for _, _, t, _ in rows],
+        np.array([op for _, op, *_ in rows], object),
+        1,
+        1,
+        "NOT_BREACHING",
+    )
+    assert breach.tolist() == [e for *_, e in rows]
+    with pytest.raises(ValueError, match="SLA 'b': unknown comparison_operator 'GreaterThanThreshold'"):
+        alarm_states(
+            np.array(["a", "b"], object),
+            [5.0, 5.0],
+            4.0,
+            np.array(["GREATER_THAN_THRESHOLD", "GreaterThanThreshold"], object),
+            1,
+            1,
+            "NOT_BREACHING",
+        )
+
+
+@pytest.mark.parametrize(
+    "bad, match",
+    [
+        ({"op": "GreaterThanThreshold"}, "SLA 'sla1': unknown comparison_operator 'GreaterThanThreshold'"),
+        ({"policy": "notBreaching"}, "SLA 'sla1': unknown treat_missing_data 'notBreaching'"),
+    ],
+    ids=["operator", "policy"],
+)
+def test_unknown_operator_or_policy_raises(spark, bad, match):
+    with pytest.raises(PythonException, match=match):
+        run(spark, [(0, 9.0)], **bad)
+
+
+def test_nan_datapoint_is_missing(spark):
+    """A NaN datapoint is a missing slot, in batch and in streaming."""
+    from tests.test_alarm_state_props import run_stream
+
+    out = evaluate_slas(series_df(spark, [(0, 1.0), (1, math.nan)]), sla_df(spark)).orderBy("ws").collect()
+    assert [r["statevalue"] for r in out] == ["OK", "OK"]
+    assert out[1]["breach"] is None
+    params = {"threshold": 5.0, "op": "GREATER_THAN_THRESHOLD", "m": 1, "n": 1, "policy": "NOT_BREACHING"}
+    assert run_stream([[(0, 1.0), (1, math.nan)]], params) == {0: "OK", 1: "OK"}
+
+
+def test_building_evaluate_slas_runs_no_job(spark):
+    series, slas = series_df(spark, [(0, 1.0), (2, 9.0)]), sla_df(spark)
+    sc = spark.sparkContext
+    sc.setJobGroup("evaluate-slas-build", "plan build only")
+    try:
+        evaluate_slas(series, slas)
+        assert sc.statusTracker().getJobIdsForGroup("evaluate-slas-build") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_m_of_n(spark):
