@@ -89,8 +89,11 @@ def connected_components(
         # Carry each vertex's OLD label through the union (`_old` is
         # non-null on exactly the one comp row per id, null on neighbor
         # rows; min() skips nulls), so the convergence check below is a
-        # filter over the just-checkpointed blocks — no join of two stored
-        # tables per round, one job instead of a shuffle-join job.
+        # filter over the round's own rows — no join of two stored tables
+        # per round. The checkpoint is lazy: the count of changed rows is
+        # the job that materialises it, so a round runs no extra job for
+        # its check. (A LIMIT in the check would compile new classes on
+        # every call.)
         neighbor_min = (
             sym.join(comp, sym["src"] == comp["id"])
             .select(
@@ -107,13 +110,9 @@ def connected_components(
                 F.min("component").alias("component"),
                 F.min("_old").alias("_old"),
             )
-            .localCheckpoint(eager=True)
+            .localCheckpoint(eager=False)
         )
-        changed = (
-            new_comp.filter(F.col("component") != F.col("_old"))
-            .limit(1)
-            .count()
-        )
+        changed = new_comp.filter(F.col("component") != F.col("_old")).count()
         comp = new_comp.select("id", "component")
         if changed == 0:
             return (
@@ -186,10 +185,16 @@ def _connected_components_star(
     for _ in range(max_iter):
         if n_edges == 0:
             break
-        e_new = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        n_new = e_new.count()
-        # Both sides are distinct sets: equal count + empty difference ⇔ equal.
-        if n_new == n_edges and e_new.exceptAll(e).limit(1).count() == 0:
+        e_new = _small_star(_large_star(e)).localCheckpoint(eager=False)
+        # One action materialises the round and counts its edges and the
+        # ones not in the previous round. Both sides are distinct sets:
+        # equal count + no new edge ⇔ equal.
+        n_new, n_added = (
+            e_new.join(e.withColumn("_old", F.lit(True)), ["u", "v"], "left")
+            .agg(F.count(F.lit(1)), F.count_if(F.col("_old").isNull()))
+            .first()
+        )
+        if n_new == n_edges and n_added == 0:
             e = e_new
             break
         e, n_edges = e_new, n_new

@@ -112,10 +112,12 @@ def scrape_metrics(
     """
     defs_f = metric_defs.filter(F.col("frequency") == frequency)  # F1
     # one driver-side pass over the (small) defs for both A2 period grouping
-    # and the percentile inventory — not two separate jobs
-    pairs = defs_f.select("period", "statistic").distinct().collect()
-    periods = sorted({r["period"] for r in pairs})
-    pcts = percentiles_in_defs([r["statistic"] for r in pairs])
+    # and the percentile inventory. The two-column projection is collected
+    # whole and de-duplicated here: a DataFrame distinct() would add a
+    # shuffle and a second job to every call.
+    pairs = set(defs_f.select("period", "statistic").collect())
+    periods = sorted({period for period, _ in pairs})
+    pcts = percentiles_in_defs([statistic for _, statistic in pairs])
 
     events = raw_events
     if start:

@@ -45,7 +45,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import StructType
 
 from ..functions.comparisons import COMPARISONS, operator_phrase
@@ -119,13 +119,7 @@ def alarm_states(sla_id, value, threshold, comparison_operator, m, n, policy):
     return breach, statevalue, breaches, n_eval
 
 
-def gap_fill(
-    series: DataFrame,
-    sla_defs: DataFrame,
-    *,
-    start: Column | None = None,
-    end: Column | None = None,
-) -> DataFrame:
+def gap_fill(series: DataFrame, sla_defs: DataFrame) -> DataFrame:
     """Expected-window grid per (sla × series) with observed values attached.
 
     ``series``  : (series_id, ws timestamp, value double) — one datapoint per
@@ -134,22 +128,20 @@ def gap_fill(
                   datapoints_to_alarm, evaluation_periods, treat_missing_data,
                   period int).
 
-    Grid bounds default to each series' [min(ws), max(ws)]; pass ``start`` /
-    ``end`` for explicit evaluation ranges (streaming incremental mode).
+    The grid spans each series' own [min(ws), max(ws)]; streaming keeps its
+    slots in ``streaming.alarm_state`` and does not use this grid.
     """
     bounds = series.groupBy("series_id").agg(
         F.min("ws").alias("min_ws"), F.max("ws").alias("max_ws")
     )
-    lo = start if start is not None else F.col("min_ws")
-    hi = end if end is not None else F.col("max_ws")
     grid = (
         sla_defs.join(F.broadcast(bounds), "series_id")
         .withColumn(
             "ws",
             F.explode(
                 F.sequence(
-                    lo,
-                    hi,
+                    F.col("min_ws"),
+                    F.col("max_ws"),
                     F.make_interval(F.lit(0), F.lit(0), F.lit(0), F.lit(0), F.lit(0), F.lit(0), F.col("period")),
                 )
             ),
@@ -185,10 +177,10 @@ def _evaluate_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Record
     yield from table.to_batches()
 
 
-def evaluate_slas(series: DataFrame, sla_defs: DataFrame, **gap_kwargs) -> DataFrame:
+def evaluate_slas(series: DataFrame, sla_defs: DataFrame) -> DataFrame:
     """Full evaluation → one row per (sla_id, ws) with ``statevalue`` ∈
     {OK, ALARM, INSUFFICIENT_DATA} and supporting columns."""
-    grid = gap_fill(series, sla_defs, **gap_kwargs)
+    grid = gap_fill(series, sla_defs)
     schema = (
         StructType([*grid.schema])
         .add("breach", "boolean")
